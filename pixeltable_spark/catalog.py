@@ -35,7 +35,6 @@ incremental loads are plain filtered scans.
 from __future__ import annotations
 
 import builtins
-import contextlib
 import functools
 import json
 import os
@@ -57,6 +56,7 @@ from .table_metadata import (ColumnMetadata, IndexMetadata, TableMetadata,
                              UpdateStatus, VersionMetadata, version_metadata)
 from .exprs import Expr
 from .plans.query import TableRef
+from .tinyplan import tiny_plan
 from .type_system import ColumnType, schema_to_struct
 
 MAXV = 1 << 62
@@ -97,6 +97,13 @@ def _bkt_col(chunk: int, n_buckets: int) -> Column:
     for every store read of every commit."""
     return F.pmod(F.floor(_ccol(_ROWID) / F.lit(chunk)),
                   F.lit(n_buckets)).cast("int")
+
+
+def _check_n_buckets(n_buckets: Optional[int]) -> None:
+    """Reject a bucket count the bucketed write cannot use (0 would
+    divide by zero in the first insert's write)."""
+    if n_buckets is not None and int(n_buckets) < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets!r}")
 
 # -- Bloom-filter file skipping ---------------------------------------------
 # Per-file Bloom filters stored in the manifest alongside min/max stats:
@@ -440,6 +447,7 @@ class Catalog:
         are file-granular, so n_buckets bounds files-per-bulk-commit and
         scan parallelism; size it to expected-table-size /
         target-file-size on a real deployment."""
+        _check_n_buckets(n_buckets)
         # accept bare type factories (pxt.String), instances
         # (pxt.String(False)), AND Column specs (pxt.Column(type=...,
         # primary_key=...) / pxt.Column(value=expr) — the reference's
@@ -549,6 +557,7 @@ class Catalog:
                     n_buckets: Optional[int] = None,
                     bucket_chunk: Optional[int] = None,
                     ) -> "View":
+        _check_n_buckets(n_buckets)
         v = View._create(self, name, self._tbl_dir(name), base, predicate,
                          extra_columns or {}, iterator,
                          n_buckets=n_buckets, bucket_chunk=bucket_chunk)
@@ -569,6 +578,7 @@ class Catalog:
         groups. ``aggs``: {out_name: (fn, col)} with fn one of
         count/sum/avg/min/max/count_distinct/stddev (col None for
         count)."""
+        _check_n_buckets(n_buckets)
         if isinstance(base, Rollup):
             raise Error("create_rollup: rollups over rollups are not "
                         "supported — aggregate the base directly")
@@ -607,61 +617,6 @@ class Catalog:
 from .localframe import local_df as _local_df  # noqa: E402
 
 
-@contextlib.contextmanager
-def _mutation_shuffle_conf(spark, n_buckets=None):
-    """Run a mutation's Spark work with AQE OFF and the shuffle width
-    pinned to the mutated table's own bucket count.
-
-    Round 11 only flipped `coalescePartitions.parallelismFirst=false`
-    here (byte-sized AQE coalescing instead of padding tiny commit
-    shuffles to defaultParallelism). Round 12 measured the remaining
-    cost of AQE itself on the commit path: every shuffle stage of every
-    commit action materializes as its OWN Spark job plus a driver
-    replanning pass (30-145 ms/job floor depending on boot) — for
-    mutation batteries that is the dominant term. A/B on the five
-    mutation-battery queries, warm, same boot: 23.3 s with AQE vs
-    18.6 s without (-20%), oracles unchanged EXACT.
-
-    The explicit width is NOT a local[32] constant — it is the table's
-    `n_buckets`, the engine's own write geometry (deployments size a
-    bucket ~ 1 GB): the COW rewrite, the rollup-maintain merge and the
-    bucket-partitioned write all land on bucket granularity anyway, so
-    pinning commit shuffles to that width matches the files the commit
-    must produce at ANY table size. What AQE would have added — skew
-    splits on the rewrite join (already broadcast by design) and byte
-    coalescing of tiny probes (now width-bounded) — is covered.
-    Reentrant (nested view/rollup maintenance keeps the OUTERMOST
-    table's settings) via a depth counter."""
-    depth = getattr(_mutation_shuffle_conf, "_depth", 0)
-    _mutation_shuffle_conf._depth = depth + 1
-    saved: list[tuple[str, str | None]] = []
-    if depth == 0:
-        confs = [("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                  "false")]
-        if n_buckets:
-            confs = [("spark.sql.adaptive.enabled", "false"),
-                     ("spark.sql.shuffle.partitions",
-                      str(max(1, int(n_buckets))))]
-        for key, val in confs:
-            try:
-                saved.append((key, spark.conf.get(key, None)))
-                spark.conf.set(key, val)
-            except Exception:  # noqa: BLE001 — conf is an optimization
-                pass
-    try:
-        yield
-    finally:
-        _mutation_shuffle_conf._depth = depth
-        for key, prev in saved:
-            try:
-                if prev is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, prev)
-            except Exception:  # noqa: BLE001
-                pass
-
-
 def _locked_mutation(fn):
     """Run a Table mutation inside the commit-store's mutation guard
     (see Table._write_lock): the posix backend serializes racing
@@ -677,10 +632,12 @@ def _locked_mutation(fn):
         attempt = 0
         while True:
             try:
+                # commit shuffles run at the table's own write geometry:
+                # the COW rewrite, rollup merge and bucketed write all
+                # land on n_buckets files anyway, at any table size, and
+                # AQE's per-stage jobs cost 20% on mutation batteries
                 with self._write_lock(), \
-                        _mutation_shuffle_conf(
-                            self.catalog.spark,
-                            getattr(self, "n_buckets", None)):
+                        tiny_plan(self.catalog.spark, self.n_buckets):
                     return fn(self, *args, **kwargs)
             except ConcurrencyError:
                 if getattr(self, "_lock_depth", 0):

@@ -24,48 +24,86 @@ bench-scale one at 1.
 Partitioning cannot change results for the sections this is applied to
 (exact-key groupBy/join/distinct pipelines and global aggregates); the
 oracle gate re-verifies every touched query.
+
+Concurrency contract: the confs are session-global, and the engine
+enters the scope from several threads at once (streaming foreachBatch
+ingest, the serving daemon, racing object-store writers). So there is
+ONE process-wide scope, shared by every thread: the first entry owns it
+and applies its settings, any entry while it is active (nested or from
+another thread) joins it and runs under the owner's settings, and the
+last one to leave restores the confs on the session they were saved
+from. A lock guards only this bookkeeping, never the scoped work, so
+concurrent mutations still run — and race — in parallel. Joining is
+safe because partitioning cannot change the scoped sections' results.
 """
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
+
+from . import telemetry
 
 _AQE_KEY = "spark.sql.adaptive.enabled"
 _SHUF_KEY = "spark.sql.shuffle.partitions"
+
+_lock = threading.Lock()
+_active = 0          # entries currently inside the scope, all threads
+_owner = None        # (spark, width, [(key, saved value)]) while active
 
 
 @contextmanager
 def tiny_plan(spark, nparts: int):
     """Run the enclosed plan-building AND its actions with AQE disabled
     and ``spark.sql.shuffle.partitions`` set to ``nparts`` (data-derived
-    by the caller). Reentrant: nested scopes keep the outermost
-    settings. Confs are restored on exit; plans built inside but
-    executed after the scope are planned with the restored session
-    confs (callers must materialize inside the scope when that
-    matters)."""
-    depth = getattr(tiny_plan, "_depth", 0)
-    tiny_plan._depth = depth + 1
-    saved: list[tuple[str, str | None]] = []
-    if depth == 0:
-        for key, val in ((_AQE_KEY, "false"),
-                         (_SHUF_KEY, str(max(1, int(nparts))))):
-            try:
-                saved.append((key, spark.conf.get(key, None)))
-                spark.conf.set(key, val)
-            except Exception:  # noqa: BLE001 — conf is an optimization
-                pass
+    by the caller). An entry while a scope is active joins it (see the
+    module docstring). Plans built inside but executed after the scope
+    are planned with the restored session confs (callers must
+    materialize inside the scope when that matters). The enclosing
+    telemetry span records the width in effect and whether this entry
+    owned the scope."""
+    global _active, _owner
+    with _lock:
+        owner = _active == 0
+        if owner:
+            saved: list[tuple[str, str | None]] = []
+            width = max(1, int(nparts))
+            for key, val in ((_AQE_KEY, "false"), (_SHUF_KEY, str(width))):
+                try:
+                    saved.append((key, spark.conf.get(key, None)))
+                    spark.conf.set(key, val)
+                except Exception:  # noqa: BLE001 — conf is an optimization
+                    pass
+            _owner = (spark, width, saved)
+        _active += 1
+        width = _owner[1]
     try:
+        span = telemetry.current_span()
+        if span is not None and "tiny_plan_owner" not in span.attrs:
+            # nested entries in the same span keep the outermost record
+            telemetry.add_attrs(span, tiny_plan_width=width,
+                                tiny_plan_owner=owner)
         yield
     finally:
-        tiny_plan._depth = depth
-        for key, old in saved:
-            try:
-                if old is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, old)
-            except Exception:  # noqa: BLE001 — restore is best-effort
-                pass
+        with _lock:
+            _active -= 1
+            if _active == 0:
+                owner_spark, _, saved = _owner
+                _owner = None
+                for key, old in saved:
+                    try:
+                        if old is None:
+                            owner_spark.conf.unset(key)
+                        else:
+                            owner_spark.conf.set(key, old)
+                    except Exception:  # noqa: BLE001 — restore is best-effort
+                        pass
+
+
+def active_count() -> int:
+    """Entries currently inside the shared scope (0 when idle)."""
+    with _lock:
+        return _active
 
 
 def materialized_width(df) -> int:

@@ -14,8 +14,46 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import pixeltable_spark as pxt  # noqa: E402
+from pixeltable_spark import tinyplan  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
+
+# session confs the engine's execution scope sets; other confs are set
+# and restored on purpose by some tests, so the guard watches only these
+_SCOPED_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+def _session_state():
+    """(session, its scoped conf values, active streaming query ids) of
+    the running SparkSession, or None when none has started yet."""
+    from pyspark.sql import SparkSession
+    s = SparkSession.getActiveSession()
+    if s is None:
+        return None
+    return (s, tuple(s.conf.get(k, None) for k in _SCOPED_CONFS),
+            frozenset(q.id for q in s.streams.active))
+
+
+@pytest.fixture(autouse=True)
+def _leak_guard():
+    """Fail the test that leaves a scoped conf changed, a streaming
+    query running or the execution scope still entered."""
+    before = _session_state()
+    yield
+    leaks = []
+    entries = tinyplan.active_count()
+    if entries:
+        leaks.append(f"tiny_plan scope still entered ({entries} entries)")
+    after = _session_state()
+    if before is not None and after is not None and after[0] is before[0]:
+        for key, old, new in zip(_SCOPED_CONFS, before[1], after[1]):
+            if old != new:
+                leaks.append(f"{key}: {old!r} -> {new!r}")
+        if after[2] - before[2]:
+            leaks.append(f"streaming queries left running: "
+                         f"{sorted(after[2] - before[2])}")
+    if leaks:
+        pytest.fail("test leaked process-wide state: " + "; ".join(leaks))
 
 
 @pytest.fixture(scope="session")

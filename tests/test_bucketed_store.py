@@ -158,3 +158,24 @@ class TestBucketedLayout:
         assert t2.bucket_chunk == 4  # chunk persists across reloads
         t2.insert([{"k": 100, "v": 1}])
         assert t2.count() == 5
+
+
+class TestBucketCountValidation:
+    @pytest.mark.parametrize("n", [0, -2])
+    @pytest.mark.parametrize("kind", ["table", "view", "rollup"])
+    def test_rejects_non_positive_n_buckets(self, cat, kind, n):
+        """0 would divide by zero in the first insert's bucketed write
+        and a negative count would silently pin the commit width to 1,
+        so every create path rejects them before creating anything."""
+        base = cat.create_table("base", {"k": pxt.Int(False),
+                                         "v": pxt.Int()})
+        create = {
+            "table": lambda: cat.create_table(
+                "bad", {"k": pxt.Int(False)}, n_buckets=n),
+            "view": lambda: cat.create_view("bad", base, n_buckets=n),
+            "rollup": lambda: cat.create_rollup(
+                "bad", base, ["k"], {"n": ("count", None)}, n_buckets=n),
+        }[kind]
+        with pytest.raises(ValueError, match="n_buckets"):
+            create()
+        assert "bad" not in cat.list_tables()

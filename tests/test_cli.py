@@ -14,8 +14,11 @@ from pixeltable_spark import cli
 
 @pytest.fixture()
 def warehouse(tmp_path, spark, monkeypatch):
-    """Fresh catalog in a temp dir; reset the module-global singleton."""
+    """Fresh catalog in a temp dir; reset the module-global singleton.
+    The CLI's get_session() re-applies the configured shuffle width to
+    the shared test session, so the fixture puts the test's width back."""
     import pixeltable_spark.globals_api as g
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     monkeypatch.setattr(g, "_catalog", None)
     home = str(tmp_path / "wh")
     g.init(spark=spark, home_dir=home)
@@ -23,6 +26,7 @@ def warehouse(tmp_path, spark, monkeypatch):
     t.insert([{"x": 1, "s": "a"}, {"x": 2, "s": "b"}, {"x": 3, "s": "c"}])
     yield home
     monkeypatch.setattr(g, "_catalog", None)
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle)
 
 
 def run(capsys, *argv):

@@ -113,12 +113,15 @@ class TestDaemonLifecycle:
         assert info["pid"] == os.getpid() and info["port"] is None
         dmod._remove_lock(wh, os.getpid())
 
-    def test_register_daemon_refuses_live_lock(self, cat):
+    def test_register_daemon_refuses_live_lock(self, cat, spark):
         """serve --register-daemon invoked while a live daemon is
         registered refuses (rc 2) and leaves the live lock untouched
         instead of hijacking it."""
         import argparse
         from pixeltable_spark.cli import cmd_serve
+        # cmd_serve's get_session() re-applies the configured shuffle
+        # width to the shared test session; put the test's width back
+        shuffle = spark.conf.get("spark.sql.shuffle.partitions")
         wh = cat.root
         os.makedirs(dmod.daemon_home(wh), exist_ok=True)
         with open(dmod._lock_path(wh), "w") as f:
@@ -127,7 +130,10 @@ class TestDaemonLifecycle:
         args = argparse.Namespace(
             daemon=False, home=wh, host="127.0.0.1", port=0,
             register_daemon=True, force=False, json=False)
-        assert cmd_serve(args) == 2
+        try:
+            assert cmd_serve(args) == 2
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", shuffle)
         assert dmod._read_lock_raw(wh)["port"] == 1
         dmod._remove_lock(wh, os.getpid())
 
